@@ -54,11 +54,15 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # shuffles while a 100 TB sf_dir lands on the cores*8 ceiling,
     # i.e. exactly the round-4 wave-smoothing policy
     if sf_dir not in _SF_BYTES:
-        import glob as _glob
         import os as _os
 
+        # tables are `{name}.parquet` files or Spark-written directories
+        # of part files: count the parquet bytes at any depth
         _SF_BYTES[sf_dir] = sum(
-            _os.path.getsize(p) for p in _glob.glob(f"{sf_dir}/*.parquet")
+            _os.path.getsize(_os.path.join(root, f))
+            for root, _dirs, files in _os.walk(sf_dir)
+            for f in files
+            if f.endswith(".parquet")
         )
     from ariadne_spark.session import scale_shuffle_to_input
 

@@ -1044,6 +1044,8 @@ def _decode_scan_walk(scan, intervals, qtables, huff, h, w, restart, hmax_g, vma
     n_mcus = mrows * mcols
     step = restart if restart else n_mcus
     n_int = -(-n_mcus // step)
+    if len(intervals) < n_int:
+        raise ValueError("truncated entropy stream")
 
     # -- per-component coefficient layout: one flat int64 array -------------
     comp_off: dict[int, int] = {}
@@ -1208,6 +1210,8 @@ def _decode_scan_waves(scan, intervals, qtables, huff, h, w, restart, hmax_g, vm
     n_mcus = mrows * mcols
     step = restart if restart else n_mcus
     n_int = -(-n_mcus // step)
+    if len(intervals) < n_int:
+        raise ValueError("truncated entropy stream")
 
     # per-component coefficient layout: one flat int64 array
     comp_off: dict[int, int] = {}

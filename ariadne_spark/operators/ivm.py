@@ -102,7 +102,8 @@ def _recover_pending(store, view: str) -> None:
     this module's merge (rollback, compaction, manual write) — the
     single-maintainer contract is broken, so the baseline is NOT
     adopted (adopting would silently skip a delta that was never
-    applied) and a loud warning names the three snapshots involved."""
+    applied) and a RuntimeError names the three snapshots involved, so
+    `refresh_agg_view` refuses to run on that view."""
     pending = _pending_intent(store, view)
     if pending is None:
         return
@@ -114,16 +115,12 @@ def _recover_pending(store, view: str) -> None:
     if cur_i == pre + 1:
         _record_baseline(store, view, int(pending["snapshot_id"]))
         return
-    import warnings
-
-    warnings.warn(
+    raise RuntimeError(
         f"IVM view {view!r}: pending intent expected snapshot "
         f"{pre} (pre-merge) or {pre + 1} (post-merge) but the view is at "
         f"{cur_i} — the view moved outside this maintainer; refusing to "
         "adopt the crashed refresh's baseline (its delta may never have "
-        "been applied). Rebuild the view with create_agg_view.",
-        RuntimeWarning,
-        stacklevel=2,
+        "been applied). Rebuild the view with create_agg_view."
     )
 
 

@@ -44,113 +44,6 @@ from ..functions.phash import hamming, phash_band
 
 DEFAULT_RES = 5
 
-# `topk_strategy` routing history: a row-count threshold originally
-# auto-routed large inputs to the map-side partial top-k. The 24M A/B
-# (BENCH.md "Round 4: partial top-k at 24M", identical output
-# fingerprints) showed row count is the WRONG routing signal: on
-# hash-realistic corpora the pair set is ~O(n) with per-src groups
-# mostly <= k+ties, so the cut prunes ~nothing and the Arrow hop is
-# pure overhead (+19% wall, +10 GB RSS, spill unchanged). What
-# predicts a win is per-src candidate FANOUT >> k (dup-heavy/
-# boilerplate shards), which n alone cannot see — so 'auto' always
-# takes the window and 'partial' is an explicit opt-in.
-
-
-def _partial_topk(pairs: DataFrame, k: int) -> DataFrame:
-    """Map-side bounded top-k: truncate each src's candidate pairs to
-    a superset of its k best WITHIN every upstream partition, before
-    the final window. Pure pre-pruning: rows cut here rank > k inside
-    their subset, hence > k globally, so the window over the union of
-    per-partition survivors returns bit-identical results for ANY
-    partitioning (asserted in tests/test_operators.py). When it pays:
-    Spark 4 already bounds the window's EXCHANGE with a partial
-    WindowGroupLimit, but feeds it with a map-side Sort of the FULL
-    candidate row set; when per-src candidate fanout >> k the cut
-    shrinks that sort's input toward k rows/src and the truncation is
-    the cheaper path. When it does NOT pay (measured, 24M A/B in
-    BENCH.md "Round 4: partial top-k at 24M"): on hash-realistic
-    corpora per-src groups are mostly <= k+ties, the tie-inclusive cut
-    prunes ~nothing, the compaction cap grows toward the full
-    per-task row count (+10 GB RSS), and the Arrow hop costs +19%
-    wall with unchanged spill — hence opt-in only, never 'auto'. It
-    pipelines with the candidate join (no extra shuffle), and the
-    residual window (with its own Sort + WindowGroupLimit) runs over
-    the survivors. Vectorized throughout — mapInArrow, so the
-    string ids are never converted to Python objects: RecordBatches are
-    buffered as-is and compacted by a numeric (factorized-src, hamming)
-    lexsort + boundary-tie-inclusive cut only when the buffer exceeds a
-    cap, and the cap grows past the irreducible carry
-    (~k x distinct-src-per-partition) so compaction stays amortized
-    O(1) per row. The reference's resolver keeps all candidates in one
-    mutable map (`packages/core/src/resolve_references/
-    call_resolver.ts:391-463`); this is the distributed-memory-bounded
-    counterpart."""
-    schema = pairs.schema
-
-    def gen(batches):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        buf: list = []  # RecordBatches — passed through untouched until compaction
-        nbuf = 0
-        cap = 1 << 20
-
-        def compact() -> None:
-            nonlocal buf, nbuf, cap
-            t = pa.Table.from_batches(buf)
-            # numeric-only selection: ids are never compared here. Per
-            # (src, partition) keep every row whose hamming <= the k-th
-            # smallest hamming in the group (boundary ties INCLUDED):
-            # the true top-k by (hamming, dst_image_id) is a subset of
-            # that cut for any dst order, so the final exact window
-            # stays bit-identical while strings avoid O(n log n)
-            # lexicographic compares (hamming is one of 65 ints; the
-            # dst tie-break only ever matters among <= tie-width rows,
-            # which the window resolves over the survivors).
-            # Only src + hamming are ever flattened (dst and the rest
-            # ride through t.take untouched); a multi-chunk src goes
-            # through large_string so the concat has 64-bit offsets —
-            # a dup-heavy partition can exceed 2 GiB of id bytes, where
-            # 32-bit-offset string concat fails.
-            src = t.column("src_image_id")
-            if src.num_chunks > 1:
-                src = src.cast(pa.large_string())
-            codes = (
-                pc.dictionary_encode(src.combine_chunks())
-                .indices.to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-            )
-            ham = t.column("hamming").to_numpy().astype(np.int64)
-            order = np.lexsort((ham, codes))
-            c_s, h_s = codes[order], ham[order]
-            n = len(c_s)
-            starts = np.flatnonzero(np.r_[True, c_s[1:] != c_s[:-1]])
-            sizes = np.diff(np.r_[starts, n])
-            bound = np.full(len(starts), np.iinfo(np.int64).max)
-            has_k = sizes >= k
-            bound[has_k] = h_s[starts[has_k] + (k - 1)]
-            keep = h_s <= np.repeat(bound, sizes)
-            t = t.take(pa.array(order[keep]))
-            buf, nbuf = t.to_batches(max_chunksize=1 << 18), t.num_rows
-            # the carry (~k per src seen so far) is irreducible; keep
-            # the trigger above it so compaction stays amortized O(1)/row
-            cap = max(cap, 2 * nbuf)
-
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            buf.append(rb)
-            nbuf += rb.num_rows
-            if nbuf >= cap:
-                compact()
-        if buf:
-            compact()
-            yield from buf
-
-    return pairs.mapInArrow(gen, schema)
-
-
 def _prune_pays(
     probe_cells: list[int],
     build_cells: list[int],
@@ -190,8 +83,6 @@ def knn_edges(
     prune_build: bool | None = None,
     join_strategy: str = "hash",
     mirror: bool | None = None,
-    topk_strategy: str = "auto",
-    n_rows_hint: int | None = None,
 ) -> DataFrame:
     """-> (src_image_id, dst_image_id, hamming, rank, confidence,
     reason) — the full Resolution{confidence, reason} contract
@@ -202,10 +93,6 @@ def knn_edges(
     hash of the *probe* side and replicates the build side, bounding the
     largest shuffle partition for hotspot cells (urban skew). salt=1 is
     a plain sort-merge self-join.
-
-    Raises ValueError up front for an unknown `topk_strategy` — a typo
-    must not silently fall through to the default window path (it would
-    invalidate any A/B that believed it measured 'partial').
 
     `build_images` restricts/extends the candidate (destination) side
     independently of the probe side — the incremental path passes the
@@ -239,27 +126,10 @@ def knn_edges(
     given (probe/build sets differ, so mirroring a found pair would
     fabricate edges).
 
-    `topk_strategy` picks how the final per-src top-k executes:
-    'window' is the plain row_number window (Spark 4's partial
-    WindowGroupLimit truncates the exchange to <= k rows/src map-side;
-    its map-side Sort runs over all surviving pairs). 'partial'
-    inserts a map-side bounded top-k (`_partial_topk`) that truncates
-    each src's candidates BEFORE that sort — an opt-in for
-    fanout-skewed corpora (per-src candidate count >> k, e.g.
-    dup-heavy/boilerplate shards) where the cut genuinely prunes. On
-    hash-realistic corpora it measured as pure overhead at 24M
-    (+19% wall, spill unchanged — the pair set is ~O(n) with per-src
-    groups mostly <= k+ties, so nothing prunes; BENCH.md "Round 4:
-    partial top-k at 24M", identical output fingerprints), which is
-    why 'auto' (default) always takes the window: probe row count
-    (`n_rows_hint`) cannot distinguish the shapes that pay. All these
-    knobs are physical only: the result rows are identical (asserted
-    in tests/test_operators.py)."""
-    if topk_strategy not in ("auto", "window", "partial"):
-        raise ValueError(
-            f"knn_edges: unknown topk_strategy {topk_strategy!r} "
-            "(expected 'auto', 'window', or 'partial')"
-        )
+    The final per-src top-k is a plain row_number window: Spark 4's
+    partial WindowGroupLimit truncates its exchange to <= k rows/src
+    map-side. All these knobs are physical only: the result rows are
+    identical (asserted in tests/test_operators.py)."""
     if salt == "auto":
         from .skew import choose_salt_distributed
 
@@ -267,8 +137,7 @@ def knn_edges(
         # (the round-3 form collected the whole cell histogram)
         salt = choose_salt_distributed(images, res, salt_target_rows)
     elif not isinstance(salt, int) or isinstance(salt, bool) or salt < 1:
-        # same must-not-fall-through rule as topk_strategy: a typo'd
-        # string would otherwise die in `salt > 1` with an opaque
+        # a typo'd string would otherwise die in `salt > 1` with an opaque
         # TypeError, and salt<=0 would silently degrade to unsalted
         raise ValueError(
             f"knn_edges: salt must be 'auto' or an int >= 1, got {salt!r}"
@@ -437,13 +306,6 @@ def knn_edges(
                 "dst_same_cell",
             )
         )
-
-    # 'auto' deliberately ignores n_rows_hint here: the 24M A/B showed
-    # row count doesn't predict when the partial cut pays (see the
-    # routing-history note above _partial_topk) — only explicit opt-in
-    # engages it.
-    if topk_strategy == "partial":
-        pairs = _partial_topk(pairs, k)
 
     w = Window.partitionBy("src_image_id").orderBy("hamming", "dst_image_id")
     return (

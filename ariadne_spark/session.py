@@ -13,6 +13,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+# session conf flag: "true" when get_spark was given an explicit
+# shuffle_partitions, which then holds for the session's lifetime
+SHUFFLE_PINNED = "spark.ariadne.shufflePinned"
+INITIAL_PARTITIONS = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
@@ -64,15 +70,17 @@ def scaled_initial_partitions(
 
 def scale_shuffle_to_input(spark, input_bytes: int) -> int:
     """Retune the session's AQE initial partition number to a job's
-    input size (AQE configs are runtime-mutable). Returns the value
-    set. Callers that know their input bytes (the sf-dir table loader,
-    size-aware jobs) call this before building their plan; everything
-    else keeps the session default (cores*8)."""
+    input size (AQE configs are runtime-mutable). Returns the session's
+    value afterwards. Callers that know their input bytes (the sf-dir
+    table loader, size-aware jobs) call this before building their
+    plan; everything else keeps the session default (cores*8). A
+    session built with an explicit shuffle_partitions is pinned and
+    left as it is."""
+    if spark.conf.get(SHUFFLE_PINNED, "false") == "true":
+        return int(spark.conf.get(INITIAL_PARTITIONS))
     cores = spark.sparkContext.defaultParallelism
     n = scaled_initial_partitions(cores, input_bytes)
-    spark.conf.set(
-        "spark.sql.adaptive.coalescePartitions.initialPartitionNum", str(n)
-    )
+    spark.conf.set(INITIAL_PARTITIONS, str(n))
     return n
 
 
@@ -84,21 +92,25 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    cores: parallelism for local mode. On a real cluster this is ignored
-    (master comes from spark-submit) — guard with SPARK_GRAFT_MASTER.
+    cores: parallelism for local mode. On a real cluster set
+    SPARK_GRAFT_MASTER: this builder's master overrides spark-submit's
+    `--master`.
+
+    shuffle_partitions: None derives both shuffle knobs from `cores`
+    (shuffle_policy) and lets size-aware callers retune them
+    (scale_shuffle_to_input); a value pins both for the session.
     """
     cores = cores or default_parallelism()
     master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cores}]")
+    pinned = shuffle_partitions is not None
     shuffle_partitions, initial_partitions = shuffle_policy(cores, shuffle_partitions)
 
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            str(initial_partitions),
-        )
+        .config(INITIAL_PARTITIONS, str(initial_partitions))
+        .config(SHUFFLE_PINNED, str(pinned).lower())
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # AQE coalesces by BYTES, which serializes Python grouped-map

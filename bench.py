@@ -26,15 +26,10 @@ misreport a round. Workload size/distribution are unchanged from
 round 1; round-1 numbers were single-shot, so treat cross-round
 deltas smaller than the documented noise band as ties.
 
-Scaling-efficiency evidence (N vs 4N cores) is produced by
-`bench_scaling.py`, which shells out to `jobs/pipeline_bench.py` —
-a PARALLEL definition of the same five stages (spark-submit needs a
-self-contained job file). The operator calls must stay in sync with
-`spatial_pipeline_stages` below: a stage change made in only one of
-the two makes the headline bench and the scaling evidence measure
-different pipelines. Known deliberate deltas: pipeline_bench passes
-n_rows_hint (the driver bench exercises the hint-free path) and names
-stages without the pipe_ prefix.
+The five pipeline stages, the fixture cache and the scan conf live in
+`ariadne_spark/flagship.py`, shared with `jobs/pipeline_bench.py`
+(the spark-submit job behind `bench_scaling.py`'s N vs 4N evidence),
+so the headline bench and the scaling evidence run the same plans.
 """
 
 from __future__ import annotations
@@ -53,6 +48,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from ariadne_spark import flagship  # noqa: E402
 from ariadne_spark.session import get_spark  # noqa: E402
 
 HEADLINE_QUERIES = [
@@ -68,85 +64,6 @@ HEADLINE_QUERIES = [
     "q32_sessionize",
 ]
 
-CACHE_DIR = os.environ.get("SPARK_GRAFT_BENCH_CACHE", "/tmp/ariadne_bench_cache")
-
-
-def _noop(df) -> None:
-    """Materialize every row through the noop sink (full execution, no
-    driver-side collect)."""
-    df.write.format("noop").mode("overwrite").save()
-
-
-def ensure_images(spark, n: int) -> str:
-    """Distributed, deterministic synthesis of the n-row images table
-    (cached — synthesis is fixture setup, not the measured workload)."""
-    # cache key v2: round 4 re-tagged the synth lossy format string to
-    # 'fjpg' (blobs/phashes unchanged, but a stale fmt='jpeg' fixture
-    # would route FJPG blobs into the REAL jpeg decoder and fail loudly)
-    path = f"{CACHE_DIR}/images_v2_{n}.parquet"
-    done = f"{CACHE_DIR}/images_v2_{n}.done"
-    if not os.path.exists(done):
-        from ariadne_spark.synth.images import images_df
-
-        images_df(spark, n).write.mode("overwrite").parquet(path)
-        with open(done, "w") as fh:
-            fh.write("ok")
-    return path
-
-
-def spatial_pipeline_stages(spark, images_path: str) -> dict[str, float]:
-    """Run + time each stage of the flagship pipeline. Returns stage->sec.
-
-    KEEP IN SYNC with jobs/pipeline_bench.py's STAGES dict (the
-    spark-submit twin used for the N-vs-4N scaling evidence) — see the
-    module docstring for the known deliberate deltas."""
-    from ariadne_spark.functions.phash import phash_udf
-    from ariadne_spark.operators.knn import knn_edges
-    from ariadne_spark.operators.pip import pip_join
-    from ariadne_spark.operators.tiles import build_pyramid, rasterize_tiles
-    from ariadne_spark.synth.regions import generate_regions
-
-    timings: dict[str, float] = {}
-    images = spark.read.parquet(images_path)
-    # pruned scan for geometry-only stages; spread across executors once
-    # (sandbox files are tiny — a single scan split would serialize the
-    # narrow stages; a 100TB scan is naturally wide)
-    cores = spark.sparkContext.defaultParallelism
-    meta = images.drop("bytes").repartition(cores * 3).persist()
-    meta.count()
-
-    t0 = time.perf_counter()
-    bad = (
-        images.select(
-            "image_id",
-            "phash",
-            phash_udf(F.col("bytes"), F.col("fmt")).alias("recomputed"),
-        )
-        .where(F.col("phash") != F.col("recomputed"))
-        .count()
-    )
-    timings["pipe_decode_phash"] = time.perf_counter() - t0
-    assert bad == 0, f"{bad} phash mismatches — decode stage corrupt"
-
-    t0 = time.perf_counter()
-    _noop(pip_join(meta, generate_regions(), deepest_only=True))
-    timings["pipe_pip_join"] = time.perf_counter() - t0
-
-    t0 = time.perf_counter()
-    _noop(knn_edges(meta, k=5, max_hamming=16))
-    timings["pipe_knn"] = time.perf_counter() - t0
-
-    t0 = time.perf_counter()
-    _noop(build_pyramid(meta, max_z=8))
-    timings["pipe_tile_pyramid"] = time.perf_counter() - t0
-
-    t0 = time.perf_counter()
-    _noop(rasterize_tiles(meta, z=5, fmt="png"))
-    timings["pipe_rasterize"] = time.perf_counter() - t0
-
-    meta.unpersist()
-    return timings
-
 
 def incremental_update_scenario(spark, n: int = 20_000) -> float:
     """1-cell-change incremental update latency (the reference's
@@ -160,13 +77,13 @@ def incremental_update_scenario(spark, n: int = 20_000) -> float:
     from ariadne_spark.operators.incremental import SpatialPipeline
     from ariadne_spark.synth.regions import generate_regions
 
-    images_path = ensure_images(spark, n)
+    images_path = flagship.ensure_images(n, spark)
     # cache key carries a STORE SCHEMA version: the cached store's
     # committed schemas must match what the current pipeline writes
     # (e.g. the knn table gained Resolution.reason in round 3) or the
     # partition-scoped update is rejected by schema conformance —
     # bump the suffix whenever a pipeline table gains/loses a column
-    base = f"{CACHE_DIR}/inc_store_{n}_v4"  # rebuilt off the v2 fixture
+    base = f"{flagship.CACHE_DIR}/inc_store_{n}_v4"  # rebuilt off the v2 fixture
     done = f"{base}.done"
     if not os.path.exists(done):
         shutil.rmtree(base, ignore_errors=True)
@@ -178,8 +95,8 @@ def incremental_update_scenario(spark, n: int = 20_000) -> float:
     # are noisy (see BENCH.md) and trial 1 additionally pays one-time
     # python-worker/JVM warmup that a long-lived service never repays
     best = float("inf")
-    for trial in range(2):
-        run_dir = f"{CACHE_DIR}/inc_run_{trial}"
+    for trial in range(flagship.TRIALS):
+        run_dir = f"{flagship.CACHE_DIR}/inc_run_{trial}"
         shutil.rmtree(run_dir, ignore_errors=True)
         shutil.copytree(base, run_dir)
         p = SpatialPipeline(spark, run_dir, generate_regions())
@@ -210,44 +127,24 @@ def main() -> None:
     # at sf0.1 the pipeline runs 200k images (~60-90s on 32 threads)
     n_images = max(int(2_000_000 * sf), 2_000)
 
-    os.makedirs(CACHE_DIR, exist_ok=True)
     spark = get_spark(
-        cores=cpus,
-        app_name="ariadne_bench",
-        extra_conf={
-            # see jobs/pipeline_bench.py: keep tiny fixture scans wide
-            "spark.sql.files.maxPartitionBytes": str(8 * 1024 * 1024),
-            "spark.sql.files.openCostInBytes": str(1 * 1024 * 1024),
-        },
+        cores=cpus, app_name="ariadne_bench", extra_conf=flagship.SCAN_CONF
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    images_path = ensure_images(spark, n_images)
+    images_path = flagship.ensure_images(n_images, spark)
 
-    timings: dict[str, float] = {}
-
-    # best of 2 trials throughout: this box shows transient host-noise
-    # windows where identical code measures 1.3-6x slower (documented
-    # cross-run in BENCH.md) — a single shot can misreport a whole
-    # round. Trial 1 additionally pays one-time python-worker/JVM
-    # warmup. Stage times are taken from the WINNING trial as a set
-    # (internally consistent), not per-stage mins across trials.
-    trials = []
-    for _ in range(2):
-        t0 = time.perf_counter()
-        stage_times = spatial_pipeline_stages(spark, images_path)
-        trials.append((time.perf_counter() - t0, stage_times))
-    pipe_sec, best = min(trials, key=lambda t: t[0])
-    timings.update(best)
+    pipe_sec, best = flagship.best_trial(spark, images_path)
+    timings = {f"pipe_{k}": v for k, v in best.items()}
 
     import __spark_entry__ as entry_mod
 
     Q = entry_mod.queries()
     for name in HEADLINE_QUERIES:
         per_trial = []
-        for _ in range(2):
+        for _ in range(flagship.TRIALS):
             t0 = time.perf_counter()
-            _noop(Q[name](spark, sf_dir))
+            flagship.noop(Q[name](spark, sf_dir))
             per_trial.append(time.perf_counter() - t0)
         timings[name] = min(per_trial)
 
@@ -266,7 +163,7 @@ def main() -> None:
     # JSON, and single-shot split lines would silently inherit host
     # noise the headline lines are defended against)
     q21_split: dict[str, float] = {}
-    for _ in range(2):
+    for _ in range(flagship.TRIALS):
         t0 = time.perf_counter()
         q21_df = Q["q21_embedding_topk"](spark, sf_dir)
         build = time.perf_counter() - t0
@@ -275,7 +172,7 @@ def main() -> None:
         )
         for kind in ("dense", "sparse", "fused", "eval", "eval_fused", "hardneg"):
             t0 = time.perf_counter()
-            _noop(q21_df.where(F.col("kind") == kind))
+            flagship.noop(q21_df.where(F.col("kind") == kind))
             dt = time.perf_counter() - t0
             q21_split[kind] = min(q21_split.get(kind, dt), dt)
 
@@ -295,7 +192,7 @@ def main() -> None:
                 "images_per_sec": round(n_images / pipe_sec, 1),
                 "n_images": n_images,
                 "cpus": cpus,
-                "trials": 2,
+                "trials": flagship.TRIALS,
                 "agg": "best",
                 "q21_split": {k: round(v, 3) for k, v in q21_split.items()},
                 "incremental_update_s": round(inc_s, 3),

@@ -48,14 +48,14 @@ def main() -> None:
     from ariadne_spark.session import get_spark
     from ariadne_spark.operators.incremental import SpatialPipeline
     from ariadne_spark.synth.regions import generate_regions
-    from bench import ensure_images
+    from ariadne_spark.flagship import CACHE_DIR, ensure_images
 
     spark = get_spark(cores=int(os.environ.get("SPARK_GRAFT_CPUS", "8")),
                       app_name="bench_maintenance")
-    root = "/tmp/ariadne_bench_cache/maint_store"
+    root = f"{CACHE_DIR}/maint_store"
     shutil.rmtree(root, ignore_errors=True)
     p = SpatialPipeline(spark, root, generate_regions())
-    images = spark.read.parquet(ensure_images(spark, args.n)).drop("bytes")
+    images = spark.read.parquet(ensure_images(args.n, spark)).drop("bytes")
     p.full_build(images)
 
     # U scattered small updates: 100 images each, phash-perturbed so

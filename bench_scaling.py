@@ -25,13 +25,15 @@ import sys
 import zipfile
 
 REPO = os.path.dirname(os.path.abspath(__file__))
-CACHE_DIR = os.environ.get("SPARK_GRAFT_BENCH_CACHE", "/tmp/ariadne_bench_cache")
+sys.path.insert(0, REPO)
+
+from ariadne_spark import flagship  # noqa: E402
 
 
 def build_pyfiles_zip() -> str:
     """Package ariadne_spark for --py-files (the deployment artifact)."""
-    path = f"{CACHE_DIR}/ariadne_spark.zip"
-    os.makedirs(CACHE_DIR, exist_ok=True)
+    path = f"{flagship.CACHE_DIR}/ariadne_spark.zip"
+    os.makedirs(flagship.CACHE_DIR, exist_ok=True)
     with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as zf:
         pkg = os.path.join(REPO, "ariadne_spark")
         for root, _dirs, files in os.walk(pkg):
@@ -42,25 +44,7 @@ def build_pyfiles_zip() -> str:
     return path
 
 
-def ensure_images(n: int) -> str:
-    from ariadne_spark.session import get_spark
-    from ariadne_spark.synth.images import images_df
-
-    # cache key v2: round 4 re-tagged the synth lossy format string to
-    # 'fjpg' (blobs/phashes unchanged, but a stale fmt='jpeg' fixture
-    # would route FJPG blobs into the REAL jpeg decoder and fail loudly)
-    path = f"{CACHE_DIR}/images_v2_{n}.parquet"
-    done = f"{CACHE_DIR}/images_v2_{n}.done"
-    if not os.path.exists(done):
-        spark = get_spark(app_name="ariadne_synth")
-        images_df(spark, n).write.mode("overwrite").parquet(path)
-        spark.stop()
-        with open(done, "w") as fh:
-            fh.write("ok")
-    return path
-
-
-def run_at(cores: int, images_path: str, zip_path: str, trials: int = 3) -> dict:
+def run_at(cores: int, images_path: str, zip_path: str, trials: int) -> dict:
     spark_submit = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
     cmd = [
         spark_submit,
@@ -79,11 +63,20 @@ def run_at(cores: int, images_path: str, zip_path: str, trials: int = 3) -> dict
     env.update(
         {"OMP_NUM_THREADS": "1", "OPENBLAS_NUM_THREADS": "1", "MKL_NUM_THREADS": "1"}
     )
+    # the job builds its session through get_spark, whose master
+    # (local[SPARK_GRAFT_CPUS]) overrides spark-submit's --master: each
+    # leg needs its own core count here, or both run at the same one
+    env["SPARK_GRAFT_CPUS"] = str(cores)
     out = subprocess.run(cmd, capture_output=True, text=True, timeout=3600, env=env)
     for line in out.stdout.splitlines():
         line = line.strip()
         if line.startswith("{") and '"images_per_sec"' in line:
-            return json.loads(line)
+            res = json.loads(line)
+            if res["cores"] != cores:
+                raise RuntimeError(
+                    f"leg asked for {cores} cores but ran at {res['cores']}"
+                )
+            return res
     raise RuntimeError(
         f"no result line from spark-submit at local[{cores}]:\n"
         f"stdout:\n{out.stdout[-2000:]}\nstderr:\n{out.stderr[-2000:]}"
@@ -98,13 +91,12 @@ def main() -> None:
                     help="(default when BENCH.md exists) append to BENCH.md")
     ap.add_argument("--overwrite", action="store_true",
                     help="replace BENCH.md instead of appending")
-    ap.add_argument("--trials", type=int, default=3)
+    ap.add_argument("--trials", type=int, default=flagship.TRIALS)
     args = ap.parse_args()
     big_cores = args.base_cores * 4
 
-    sys.path.insert(0, REPO)
     zip_path = build_pyfiles_zip()
-    images_path = ensure_images(args.n_images)
+    images_path = flagship.ensure_images(args.n_images)
 
     res_n = run_at(args.base_cores, images_path, zip_path, args.trials)
     res_4n = run_at(big_cores, images_path, zip_path, args.trials)

@@ -34,7 +34,7 @@ for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-CACHE_DIR = os.environ.get("SPARK_GRAFT_BENCH_CACHE", "/tmp/ariadne_bench_cache")
+from ariadne_spark.flagship import CACHE_DIR  # noqa: E402
 
 
 # ---------------------------------------------------------------------------
@@ -206,21 +206,17 @@ def run_stress(
     n: int,
     cores: int,
     stages_sel: list[str] | None = None,
-    knn_topk: str = "auto",
     fingerprint: bool = False,
     shuffle_partitions: int | None = None,
 ) -> dict:
     from pyspark.sql import functions as F
 
+    from ariadne_spark.flagship import PLANS, noop
     from ariadne_spark.functions.fingerprint import df_fingerprint
     from ariadne_spark.operators.curation import pack_sequences
-    from ariadne_spark.operators.knn import knn_edges
-    from ariadne_spark.operators.pip import pip_join
     from ariadne_spark.operators.pq import ivf_pq_topk, pq_encode, pq_train
     from ariadne_spark.operators.semdedup import semdedup_pairs
-    from ariadne_spark.operators.tiles import build_pyramid, rasterize_tiles
     from ariadne_spark.session import get_spark
-    from ariadne_spark.synth.regions import generate_regions
 
     known = (
         "rowcount", "pip_join", "knn", "tile_pyramid", "rasterize",
@@ -242,9 +238,6 @@ def run_stress(
         shuffle_partitions=shuffle_partitions,
         extra_conf={"spark.ui.enabled": "true"},
     )
-
-    def noop(df):
-        df.write.format("noop").mode("overwrite").save()
 
     sampler = RssSampler().start()
     meta = spark.read.parquet(meta_path)
@@ -279,17 +272,10 @@ def run_stress(
         print(f"# {name}: {json.dumps(stages[name])}", file=sys.stderr)
 
     run("rowcount", lambda: meta.count())
-    run("pip_join", lambda: noop(pip_join(meta, generate_regions(), deepest_only=True)))
-    run(
-        "knn",
-        lambda: noop(
-            knn_edges(
-                meta, k=5, max_hamming=16, n_rows_hint=n, topk_strategy=knn_topk
-            )
-        ),
-    )
-    run("tile_pyramid", lambda: noop(build_pyramid(meta, max_z=8)))
-    run("rasterize", lambda: noop(rasterize_tiles(meta, z=5, fmt="png")))
+    # the flagship pipeline's four shuffle-bearing stages, as bench.py
+    # and jobs/pipeline_bench.py run them
+    for name, plan in PLANS.items():
+        run(name, lambda plan=plan: noop(plan(meta)))
 
     # -- curation/dedup tier (round-5 verdict item 6) -----------------------
     # Sizes are the operators' own cost-model knobs, stated here so the
@@ -349,16 +335,13 @@ def run_stress(
     knn_fp = None
     if fingerprint:
         # order-independent (n_rows, content hash), the SAME helper
-        # jobs/pipeline_bench.py imports: proves window/partial top-k
-        # return IDENTICAL edges at the full row count, not just
-        # matching times. Re-point the sampler first — this re-runs the
-        # full kNN untimed, and leaving sampler.stage on the last timed
-        # stage would inflate THAT stage's recorded peak RSS.
+        # jobs/pipeline_bench.py uses: equality evidence across physical
+        # settings (e.g. --shuffle-partitions) at the full row count.
+        # Re-point the sampler first — this re-runs the full kNN
+        # untimed, and leaving sampler.stage on the last timed stage
+        # would inflate THAT stage's recorded peak RSS.
         sampler.stage = "fingerprint"
-        edges = knn_edges(
-            meta, k=5, max_hamming=16, n_rows_hint=n, topk_strategy=knn_topk
-        )
-        knn_fp = df_fingerprint(edges)
+        knn_fp = df_fingerprint(PLANS["knn"](meta))
     sampler.stop()
     spark.stop()
     total = sum(s["sec"] for s in stages.values())
@@ -393,11 +376,6 @@ def main() -> None:
         "runs of one stage without paying the whole suite",
     )
     ap.add_argument(
-        "--knn-topk", default="auto", choices=("auto", "window", "partial"),
-        help="knn_edges topk_strategy under test (auto == window; "
-        "partial is the explicit opt-in — see BENCH.md 24M A/B)",
-    )
-    ap.add_argument(
         "--shuffle-partitions", type=int, default=None,
         help="override spark.sql.shuffle.partitions for the run (default: "
         "session shuffle_policy — cores*2 fallback + cores*8 AQE initial; "
@@ -408,14 +386,13 @@ def main() -> None:
     ap.add_argument(
         "--fingerprint", action="store_true",
         help="also compute the knn result's order-independent fingerprint "
-        "(cross-strategy equality evidence at full scale)",
+        "(equality evidence across physical settings at full scale)",
     )
     args = ap.parse_args()
     res = run_stress(
         args.n_images,
         args.cores,
         stages_sel=args.stages.split(",") if args.stages else None,
-        knn_topk=args.knn_topk,
         fingerprint=args.fingerprint,
         shuffle_partitions=args.shuffle_partitions,
     )

@@ -3,11 +3,16 @@
 
 Usage (the north rule's deployment shape — `spark-submit --py-files`):
 
-    spark-submit --master local[8] --py-files /tmp/ariadne_spark.zip \
+    SPARK_GRAFT_CPUS=8 spark-submit --master local[8] \
+        --py-files /tmp/ariadne_spark.zip \
         jobs/pipeline_bench.py --images /path/images.parquet
 
-The master (N vs 4N executors) comes from spark-submit; this script
-only declares the plan. Prints ONE JSON line with per-stage seconds.
+The session comes from `ariadne_spark.session.get_spark`, the stages
+from `ariadne_spark.flagship` — the same session policy and plans as
+`bench.py`. `get_spark` sets the master from SPARK_GRAFT_CPUS (or
+SPARK_GRAFT_MASTER), and builder options override spark-submit's
+`--master`, so the environment decides the parallelism. Prints ONE
+JSON line with per-stage seconds and result fingerprints.
 `bench_scaling.py` invokes it at two parallelism levels on the SAME
 input and computes scaling efficiency.
 """
@@ -18,7 +23,6 @@ import argparse
 import json
 import os
 import sys
-import time
 
 # see bench.py: pin BLAS pools before any worker forks
 for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
@@ -26,121 +30,33 @@ for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
 
 
 def main() -> None:
+    from ariadne_spark import flagship
+    from ariadne_spark.functions.fingerprint import df_fingerprint
+    from ariadne_spark.session import get_spark
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--images", required=True)
-    ap.add_argument("--max-z", type=int, default=8)
     ap.add_argument(
-        "--trials", type=int, default=3,
-        help="runs per stage; min is reported (steady state: first trial "
-        "pays python-worker forks + JVM JIT, which a long-running cluster "
-        "job amortizes to zero)",
+        "--trials", type=int, default=flagship.TRIALS,
+        help="whole-pipeline passes; the fastest pass is reported as a set",
     )
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
-
-    spark = (
-        SparkSession.builder.appName("ariadne_pipeline_bench")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # parallelism floor for byte-small, CPU-heavy Python stages
-        # (see ariadne_spark/session.py)
-        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16KB")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        # sandbox fixture files are small (hundreds of MB total); the
-        # default 128MB split packing would collapse the scan to a
-        # handful of input partitions and serialize the Arrow-UDF decode
-        # — at 100TB the scan is naturally wide and this knob is moot
-        .config("spark.sql.files.maxPartitionBytes", str(8 * 1024 * 1024))
-        .config("spark.sql.files.openCostInBytes", str(1 * 1024 * 1024))
-        # ~8MB Arrow batches — see ariadne_spark/session.py
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="ariadne_pipeline_bench", extra_conf=flagship.SCAN_CONF)
     spark.sparkContext.setLogLevel("ERROR")
     cores = spark.sparkContext.defaultParallelism
-    # shuffle partitioning: the ONE policy home is
-    # ariadne_spark.session.shuffle_policy (high-ish AQE initial
-    # partition number coalesced down by bytes at runtime smooths wave
-    # quantization — measured −39%..−67% on the kNN stage at both
-    # 24M/local[8] and sf0.1/local[32], BENCH.md round-4 sections) —
-    # imported so the scaling-evidence job can never measure a
-    # different policy than the library ships
-    from ariadne_spark.session import shuffle_policy
-
-    sp, initial = shuffle_policy(cores, None)
-    spark.conf.set("spark.sql.shuffle.partitions", str(sp))
-    spark.conf.set(
-        "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        str(initial),
-    )
-
-    from ariadne_spark.functions.phash import phash_udf
-    from ariadne_spark.operators.knn import knn_edges
-    from ariadne_spark.operators.pip import pip_join
-    from ariadne_spark.operators.tiles import build_pyramid, rasterize_tiles
-    from ariadne_spark.synth.regions import generate_regions
-
-    def noop(df):
-        df.write.format("noop").mode("overwrite").save()
-
     images = spark.read.parquet(args.images)
     n_images = images.count()  # also warms the JVM + file listing
-    # the geometry-only columns are a few MB at sandbox scale — one scan
-    # partition — so spread them across the executors once (at real
-    # scale the scan itself is already wide); materialized untimed
-    meta = images.drop("bytes").repartition(cores * 3).persist()
-    meta.count()
 
-    def decode_stage():
-        bad = (
-            images.select(
-                "phash", phash_udf(F.col("bytes"), F.col("fmt")).alias("re")
-            )
-            .where(F.col("phash") != F.col("re"))
-            .count()
-        )
-        assert bad == 0
+    _, timings = flagship.best_trial(spark, args.images, args.trials)
 
-    # KEEP IN SYNC with bench.py's spatial_pipeline_stages (the driver
-    # bench twin): a stage change made in only one of the two makes the
-    # headline bench and the scaling evidence measure different
-    # pipelines. Deliberate deltas: n_rows_hint here, pipe_ prefix there.
-    stages = {
-        "decode_phash": decode_stage,
-        "pip_join": lambda: noop(pip_join(meta, generate_regions(), deepest_only=True)),
-        "knn": lambda: noop(knn_edges(meta, k=5, max_hamming=16, n_rows_hint=n_images)),
-        "tile_pyramid": lambda: noop(build_pyramid(meta, max_z=args.max_z)),
-        "rasterize": lambda: noop(rasterize_tiles(meta, z=5, fmt="png")),
-    }
-
-    timings: dict[str, float] = {}
-    for name, fn in stages.items():
-        best = float("inf")
-        for _ in range(args.trials):
-            t0 = time.perf_counter()
-            fn()
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = best
-
-    # order-independent (n_rows, content hash) of a result — the
+    # order-independent (n_rows, content hash) of each result — the
     # cross-cluster-size EQUALITY evidence: the north rule requires
     # identical join rows / tile assignments at N and 4N, not just
-    # matching throughput. ONE shared construction (also used by
-    # bench_stress.py's cross-strategy equality) so fingerprints stay
-    # comparable across scripts by import, not by parallel maintenance.
-    from ariadne_spark.functions.fingerprint import df_fingerprint as fingerprint
-
-    fingerprints = {
-        "pip_join": fingerprint(pip_join(meta, generate_regions(), deepest_only=True)),
-        "knn": fingerprint(knn_edges(meta, k=5, max_hamming=16, n_rows_hint=n_images)),
-        "tile_pyramid": fingerprint(build_pyramid(meta, max_z=args.max_z)),
-        "rasterize": fingerprint(rasterize_tiles(meta, z=5, fmt="png")),
-    }
+    # matching throughput
+    meta = flagship.spread_meta(images)
+    fingerprints = {name: df_fingerprint(plan(meta)) for name, plan in flagship.PLANS.items()}
+    meta.unpersist()
 
     total = sum(timings.values())
     print(

@@ -364,16 +364,48 @@ def test_scaled_initial_partitions_law():
     assert scaled_initial_partitions(2, 123) == 8            # tiny-box floor
 
 
-def test_entry_loader_scales_session_to_corpus(spark):
-    """__spark_entry__._t must retune the session's AQE initial
-    partition number to the sf_dir's on-disk size."""
+def test_entry_loader_scales_session_to_corpus(spark, tmp_path):
+    """__spark_entry__._t must retune an UNPINNED session's AQE initial
+    partition number to the sf_dir's on-disk size. The session starts
+    off the floor, so only a retune can land it there."""
+    import __spark_entry__ as E
+    from ariadne_spark.session import INITIAL_PARTITIONS, SHUFFLE_PINNED
+
+    spark.range(10).write.parquet(str(tmp_path / "region.parquet"))
+    unpinned = spark.newSession()  # own SQL conf, shared SparkContext
+    unpinned.conf.set(SHUFFLE_PINNED, "false")
+    unpinned.conf.set(INITIAL_PARTITIONS, "13")
+    E._t(unpinned, str(tmp_path), "region").count()
+    cores = spark.sparkContext.defaultParallelism
+    assert int(unpinned.conf.get(INITIAL_PARTITIONS)) == max(cores, 8)  # tiny corpus -> floor
+
+
+def test_entry_loader_leaves_pinned_session_alone(spark, tmp_path):
+    """A session built with an explicit shuffle_partitions is pinned:
+    the sf-dir loader must not overwrite its AQE initial partition
+    number, here set to a value the sizing policy would never pick."""
+    import __spark_entry__ as E
+    from ariadne_spark.session import INITIAL_PARTITIONS, SHUFFLE_PINNED
+
+    assert spark.conf.get(SHUFFLE_PINNED) == "true"  # conftest pins at 8
+    spark.range(10).write.parquet(str(tmp_path / "region.parquet"))
+    old = spark.conf.get(INITIAL_PARTITIONS)
+    try:
+        spark.conf.set(INITIAL_PARTITIONS, "13")
+        E._t(spark, str(tmp_path), "region").count()
+        assert spark.conf.get(INITIAL_PARTITIONS) == "13"
+    finally:
+        spark.conf.set(INITIAL_PARTITIONS, old)
+
+
+def test_entry_loader_sizes_directory_tables(spark, tmp_path):
+    """An sf_dir whose table is a Spark-written directory of part files
+    is sized by the bytes of those part files, not by the directory
+    entry's own size."""
     import __spark_entry__ as E
 
-    key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-    old = spark.conf.get(key)
-    try:
-        E._t(spark, "/root/testdata/sf0.01", "region").count()
-        cores = spark.sparkContext.defaultParallelism
-        assert int(spark.conf.get(key)) == max(cores, 8)  # tiny corpus -> floor
-    finally:
-        spark.conf.set(key, old)
+    spark.range(2000).repartition(2).write.parquet(str(tmp_path / "t.parquet"))
+    parts = list((tmp_path / "t.parquet").glob("*.parquet"))
+    assert len(parts) >= 2
+    assert E._t(spark, str(tmp_path), "t").count() == 2000
+    assert E._SF_BYTES[str(tmp_path)] == sum(p.stat().st_size for p in parts)

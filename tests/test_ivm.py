@@ -225,9 +225,8 @@ def test_recover_refuses_foreign_view_movement(spark, tmp_path):
     pre_sid+1 (rollback/compaction/manual write after a pre-baseline
     crash) must NOT be adopted as 'merge committed' — the old inference
     (any movement == committed) would record a baseline for a delta
-    that was never applied. The recovery warns loudly instead."""
-    import warnings as _w
-
+    that was never applied. The recovery raises instead, so a refresh
+    refuses to run on that view."""
     import pytest
 
     from ariadne_spark.operators import ivm as ivm_mod
@@ -251,14 +250,14 @@ def test_recover_refuses_foreign_view_movement(spark, tmp_path):
         refresh_agg_view(st, "base", "v", "lang", ["tokens"])
 
     # ...then the view moves TWICE through a foreign writer (two manual
-    # re-snapshots), so cur == pre+2: recovery must refuse + warn
+    # re-snapshots), so cur == pre+2: recovery and refresh must refuse
     v = st.read("v")
     st.write_table(v, "v", key="lang")
     st.write_table(v, "v", key="lang")
-    with _w.catch_warnings(record=True) as got:
-        _w.simplefilter("always")
+    with pytest.raises(RuntimeError, match="outside this maintainer"):
         ivm_mod._recover_pending(st, "v")
-    assert any("outside this maintainer" in str(x.message) for x in got)
+    with pytest.raises(RuntimeError, match="outside this maintainer"):
+        refresh_agg_view(st, "base", "v", "lang", ["tokens"])
     # and no baseline was recorded for the never-applied delta
     from ariadne_spark.operators.ivm import recorded_baseline
 

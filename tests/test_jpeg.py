@@ -404,6 +404,25 @@ def test_truncated_stream_still_raises_on_vectorized_path():
         decode_jpeg(cut + b"\xff\xd9")
 
 
+
+@pytest.mark.parametrize("path", ["_decode_scan_walk", "_decode_scan_waves"])
+def test_missing_final_restart_interval_raises_truncated(monkeypatch, path):
+    """A restart-marked stream cut at its last RSTn marker carries one
+    interval fewer than its MCU count needs: both production entropy
+    paths must reject it as truncated, not fail on an index."""
+    import re
+
+    from ariadne_spark.functions import jpeg as J
+
+    rng = np.random.default_rng(14)
+    px = rng.integers(0, 256, size=(48, 176, 3), dtype=np.uint8)
+    data = encode_jpeg(px, 85, "420", restart_mcus=2)  # 17 intervals
+    last_rst = [m.start() for m in re.finditer(rb"\xff[\xd0-\xd7]", data)][-1]
+    cut = data[:last_rst] + b"\xff\xd9"
+    monkeypatch.setattr(J, "_decode_scan", getattr(J, path))
+    with pytest.raises(ValueError, match="^truncated entropy stream$"):
+        decode_jpeg(cut)
+
 # ---------------------------------------------------------------------------
 # progressive (SOF2) — encode/decode conformance
 # ---------------------------------------------------------------------------

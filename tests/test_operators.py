@@ -174,65 +174,6 @@ class TestKnn:
                     }
                     assert got == base, (prune, strat, mir)
 
-    def test_partial_topk_matches_window(self, spark, images_df):
-        """topk_strategy='partial' (map-side bounded top-k before the
-        final window) returns the identical edge set — including the
-        full Resolution payload — for any upstream partitioning, with
-        and without salting/mirroring; and 'auto' stays on the window
-        regardless of n_rows_hint (the 24M A/B showed row count is the
-        wrong routing signal — partial is explicit opt-in)."""
-        cols = (
-            "src_image_id", "dst_image_id", "hamming", "rank",
-            "confidence", "reason",
-        )
-
-        def edges(df, **kw):
-            return {
-                tuple(r[c] for c in cols)
-                for r in knn_edges(df, k=3, max_hamming=16, **kw).collect()
-            }
-
-        base = edges(images_df, topk_strategy="window")
-        assert edges(images_df, topk_strategy="partial") == base
-        # partition-invariance: truncation runs per upstream partition;
-        # the window over the survivors must erase that dependence
-        for nparts in (1, 7):
-            assert edges(images_df.repartition(nparts), topk_strategy="partial") == base
-        # composes with the other physical knobs
-        assert edges(images_df, topk_strategy="partial", salt=4) == base
-        assert edges(images_df, topk_strategy="partial", mirror=False) == base
-        # 'auto' is window-only now (opt-in partial): same rows either
-        # way, and a huge hint must NOT flip it to the Arrow path
-        assert edges(images_df, n_rows_hint=10**9) == base
-        assert edges(images_df) == base
-        auto_plan = (
-            knn_edges(images_df, k=3, n_rows_hint=10**9)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "MapInArrow" not in auto_plan
-
-    def test_partial_topk_plan_shape(self, spark, images_df):
-        """The partial path pipelines a MapInArrow between the
-        candidate join and the top-k window (no extra Exchange); the
-        window path has no Python stage at all."""
-        part = knn_edges(images_df, k=3, topk_strategy="partial")
-        win = knn_edges(images_df, k=3, topk_strategy="window")
-        p_plan = part._jdf.queryExecution().executedPlan().toString()
-        w_plan = win._jdf.queryExecution().executedPlan().toString()
-        assert "MapInArrow" in p_plan
-        assert "MapInArrow" not in w_plan
-        # same shuffle count: truncation must not add an Exchange
-        assert p_plan.count("Exchange") == w_plan.count("Exchange")
-
-    def test_topk_strategy_typo_raises(self, spark, images_df):
-        """An unknown topk_strategy raises ValueError up front (survives
-        python -O): a typo must not silently measure the window path in
-        an A/B that believed it measured 'partial'."""
-        import pytest
-
-        with pytest.raises(ValueError, match="topk_strategy"):
-            knn_edges(images_df, k=3, topk_strategy="partail")
-
     def test_half_kring_offsets_partition(self):
         """half_kring_offsets picks exactly one of each antipodal pair
         (plus the center) — the invariant that makes 'found once,
