@@ -2488,6 +2488,7 @@ def oracle_sql() -> dict[str, str]:
     from ariadne_spark.operators import export as _export
     from ariadne_spark.operators import features as _features
     from ariadne_spark.functions.sketch import mix_sql as _mix_sql
+    from ariadne_spark.functions import embed
 
     geo = _DOCS_GEO_SQL
     cell8 = cells.sql_pack_cell(8, cells.sql_cell_x("lon_u", 8), cells.sql_cell_y("lat_u", 8))
@@ -2851,8 +2852,7 @@ def oracle_sql() -> dict[str, str]:
         "q21_embedding_topk": f"""
             WITH q AS (
               SELECT vec_id,
-                     list_transform(embedding,
-                                    x -> CAST(round(x * 1000) AS BIGINT)) AS qv
+                     list_transform(embedding, x -> {embed.QUANTIZE_SQL}) AS qv
               FROM embeddings),
             pairs AS (
               SELECT a.vec_id AS src, b.vec_id AS dst,
@@ -3083,8 +3083,7 @@ def oracle_sql() -> dict[str, str]:
         "q38_embedding_neardup": f"""
             WITH q AS (
               SELECT vec_id,
-                     list_transform(embedding,
-                                    x -> CAST(round(x * 1000) AS BIGINT)) AS qv
+                     list_transform(embedding, x -> {embed.QUANTIZE_SQL}) AS qv
               FROM embeddings),
             pairs AS (
               SELECT a.vec_id AS a, b.vec_id AS b,

@@ -196,16 +196,6 @@ def cell_neighbors_df(cells_df, cell_col: str, res: int, k: int = 1, offsets=Non
     )
 
 
-def lon_to_micro(lon: Column) -> Column:
-    """Degrees [-180,180) -> integer microdegrees [0, 360e6)."""
-    return F.round((lon + F.lit(180.0)) * F.lit(1_000_000)).cast("long") % F.lit(LON_SPAN)
-
-
-def lat_to_micro(lat: Column) -> Column:
-    u = F.round((lat + F.lit(90.0)) * F.lit(1_000_000)).cast("long")
-    return F.least(F.greatest(u, F.lit(0)), F.lit(LAT_SPAN - 1))
-
-
 # ---------------------------------------------------------------------------
 # SQL fragments — same formulas for the DuckDB oracle
 # ---------------------------------------------------------------------------

@@ -44,7 +44,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
-from pyspark.sql.window import Window
+
+from ariadne_spark.functions.embed import CENT_QSCALE, EMB_QSCALE, q_round, quantize
+from ariadne_spark.operators.exact_sim import rerank_topk
 
 SEED = 1729
 
@@ -111,10 +113,10 @@ def ann_topk(
     4, 8) only for small recall-tuned corpora where a near-quadratic
     candidate set is affordable.
 
-    Scores are the SAME quantized integer dot product as the exact
-    baseline (`q21`): round(x*1000) per component, summed as int64 —
-    deterministic and engine-independent, so ANN results are directly
-    comparable (recall = overlap of (src,dst) sets).
+    Candidates are re-ranked by `exact_sim.rerank_topk`, the same
+    integer score and rank as the exact baseline (`q21`), so ANN
+    results are directly comparable (recall = overlap of (src,dst)
+    sets).
     """
     if n_planes is None or n_tables is None:
         auto_p, auto_t = lsh_params(embeddings.count())
@@ -125,7 +127,6 @@ def ann_topk(
     planes = hyperplanes(dim, n_planes, n_tables, seed)
     buckets = _bucket_udf(planes)
 
-    qv = F.transform(F.col("embedding"), lambda x: F.round(x * 1000).cast("long"))
     # candidate generation ships ONLY (vec_id, table_id, bucket) through
     # the bucket self-join — the full int64 vectors (dim×8 B each) are
     # joined back AFTER pair dedup, cutting candidate-shuffle bytes by
@@ -148,45 +149,19 @@ def ann_topk(
         .agg(F.min("table_id").alias("first_table"))
         .drop("first_table")
     )
-
-    vecs = embeddings.select("vec_id", qv.alias("q"))
-    dot = F.aggregate(
-        F.zip_with(F.col("qa"), F.col("qb"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    ranked = (
-        cand.join(
-            vecs.select(F.col("vec_id").alias("src"), F.col("q").alias("qa")), "src"
-        )
-        .join(
-            vecs.select(F.col("vec_id").alias("dst"), F.col("q").alias("qb")), "dst"
-        )
-        .select("src", "dst", dot.alias("dot_q"))
-    )
-    w = Window.partitionBy("src").orderBy(F.desc("dot_q"), F.col("dst"))
-    return (
-        ranked.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return rerank_topk(cand, embeddings, k)
 
 
 def brute_force_topk(embeddings: DataFrame, k: int = 3) -> DataFrame:
-    """Exact baseline (same contract as driver query q21)."""
-    qv = F.transform(F.col("embedding"), lambda x: F.round(x * 1000).cast("long"))
-    base = embeddings.select("vec_id", qv.alias("q"))
-    a = base.select(F.col("vec_id").alias("src"), F.col("q").alias("qa"))
-    b = base.select(F.col("vec_id").alias("dst"), F.col("q").alias("qb"))
-    dot = F.aggregate(
-        F.zip_with(F.col("qa"), F.col("qb"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
+    """Exact all-pairs reference (same contract as driver query q21):
+    every ordered pair is a candidate of the shared re-rank step."""
+    ids = embeddings.select("vec_id")
+    cand = (
+        ids.select(F.col("vec_id").alias("src"))
+        .crossJoin(ids.select(F.col("vec_id").alias("dst")))
+        .where(F.col("src") != F.col("dst"))
     )
-    pairs = a.crossJoin(b).where(F.col("src") != F.col("dst")).select(
-        "src", "dst", dot.alias("dot_q")
-    )
-    w = Window.partitionBy("src").orderBy(F.desc("dot_q"), F.col("dst"))
-    return pairs.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return rerank_topk(cand, embeddings, k)
 
 
 def _centroids(embeddings: DataFrame, n_centroids: int) -> np.ndarray:
@@ -202,21 +177,6 @@ def _centroids(embeddings: DataFrame, n_centroids: int) -> np.ndarray:
         .collect()
     )
     return np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in rows])
-
-
-EMB_QSCALE = 1_000  # matches the exact-score quantization (q21)
-CENT_QSCALE = 1_000_000
-
-
-def q_round(mat: np.ndarray, scale: int) -> np.ndarray:
-    """HALF_UP (away-from-zero) quantization to int64 — the SAME
-    rounding as Spark's F.round and DuckDB's round(), so numpy-side
-    quantization in the ANN/PQ/SemDeDup kernels is bit-identical to
-    the JVM/oracle q21/q38 arithmetic. np.round is banker's
-    half-to-even and diverges at exact .5 boundaries (e.g.
-    0.0625*1000: np.round -> 62, F.round -> 63)."""
-    m = np.asarray(mat, dtype=np.float64)
-    return (np.sign(m) * np.floor(np.abs(m) * scale + 0.5)).astype(np.int64)
 
 
 def _ivf_assign_udf(cents: np.ndarray, n_probe: int):
@@ -265,19 +225,16 @@ def _kmeans_refine(
     embeddings: DataFrame, cents: np.ndarray, iters: int
 ) -> np.ndarray:
     """Spherical k-means refinement of the sampled centroids. Cluster
-    sums use per-component integer quantization (round(x*1e6) summed as
-    int64) so the aggregation is ORDER-INDEPENDENT — float summation
+    sums use per-component integer quantization (`quantize` at
+    CENT_QSCALE, summed as int64) so the aggregation is ORDER-INDEPENDENT — float summation
     order varies with partitioning and would break the cross-cluster-
     size determinism contract. Each new centroid is the normalized
     cluster mean; empty clusters keep their previous centroid."""
-    QSCALE = 1_000_000
     for _ in range(iters):
         assign = _ivf_assign_udf(cents, 1)
-        qcomp = F.transform(
-            F.col("embedding"), lambda x: F.round(x * QSCALE).cast("long")
-        )
         assigned = embeddings.select(
-            assign(F.col("embedding")).alias("a"), qcomp.alias("q")
+            assign(F.col("embedding")).alias("a"),
+            quantize(F.col("embedding"), CENT_QSCALE).alias("q"),
         ).select(F.col("a.own_cell").alias("cell"), "q")
         dim = cents.shape[1]
         sums = (
@@ -292,7 +249,7 @@ def _kmeans_refine(
         acc = np.zeros((len(cents), dim))
         cnt = np.zeros(len(cents), dtype=np.int64)
         for r in sums:
-            acc[r["cell"], r["i"]] = r["s"] / QSCALE
+            acc[r["cell"], r["i"]] = r["s"] / CENT_QSCALE
             cnt[r["cell"]] = r["n"]
         for c in range(len(cents)):
             if cnt[c] > 0:
@@ -332,7 +289,6 @@ def ann_ivf(
     if kmeans_iters:
         cents = _kmeans_refine(embeddings, cents, kmeans_iters)
     assign = _ivf_assign_udf(cents, n_probe)
-    qv = F.transform(F.col("embedding"), lambda x: F.round(x * 1000).cast("long"))
 
     # eager localCheckpoint: both sides of the cell self-join read
     # `assigned`, and the centroid-assignment UDF pass over the full
@@ -357,24 +313,4 @@ def ann_ivf(
         .where(F.col("src") != F.col("dst"))
         .select("src", "dst")
     )
-
-    vecs = embeddings.select("vec_id", qv.alias("q"))
-    dot = F.aggregate(
-        F.zip_with(F.col("qa"), F.col("qb"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    ranked = (
-        cand.join(
-            vecs.select(F.col("vec_id").alias("src"), F.col("q").alias("qa")), "src"
-        )
-        .join(
-            vecs.select(F.col("vec_id").alias("dst"), F.col("q").alias("qb")), "dst"
-        )
-        .select("src", "dst", dot.alias("dot_q"))
-    )
-    w = Window.partitionBy("src").orderBy(F.desc("dot_q"), F.col("dst"))
-    return (
-        ranked.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return rerank_topk(cand, embeddings, k)

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ariadne_spark.functions.embed import int_dot, quantize
+
 
 def word_ngrams(text_col: str, n: int) -> Column:
     """Array of space-joined word n-grams of `text_col` (Column expr).
@@ -1429,8 +1431,9 @@ def alignment_filter(
     LAION-style curation gate for paired multimodal corpora; LAION-400M
     used CLIP cosine >= 0.3).
 
-    The gate is float-free past quantization: components quantize to
-    `round(x*1000)::long` (the repo's shared embedding scale), and
+    The gate is float-free past quantization: components quantize
+    through `functions.embed.quantize` and score through
+    `functions.embed.int_dot`, the one embedding-score contract, and
     `cos >= t/1000` is evaluated as the cross-multiplied integer
     comparison
 
@@ -1451,23 +1454,18 @@ def alignment_filter(
     assert 0 <= threshold_permille <= 1000
     t = threshold_permille
 
-    def qv(c: str) -> Column:
-        return F.transform(F.col(c), lambda x: F.round(x * 1000).cast("long"))
-
     # materialize each quantized array ONCE: dot and the norm both
     # consume it, and Catalyst's CollapseProject duplicates (not CSEs)
     # an expensive aliased expression only when it is referenced once —
     # same pattern and rationale as bloom_decontaminate's fingerprint
     # materialization above (measured there: 19.6 s -> ~6 s at sf0.1)
     qa, qb = "__qa_align", "__qb_align"
-    quant = pairs.withColumn(qa, qv(img_col)).withColumn(qb, qv(txt_col))
-    zero = F.lit(0).cast("long")
-    add = lambda acc, v: acc + v
-    dot = F.aggregate(
-        F.zip_with(F.col(qa), F.col(qb), lambda x, y: x * y), zero, add
+    quant = pairs.withColumn(qa, quantize(F.col(img_col))).withColumn(
+        qb, quantize(F.col(txt_col))
     )
-    na = F.aggregate(F.transform(F.col(qa), lambda x: x * x), zero, add)
-    nb = F.aggregate(F.transform(F.col(qb), lambda x: x * x), zero, add)
+    dot = int_dot(F.col(qa), F.col(qb))
+    na = int_dot(F.col(qa), F.col(qa))
+    nb = int_dot(F.col(qb), F.col(qb))
     D = lambda c: c.cast("decimal(38,0)")
     # sign guard: squaring erases the sign, so negative-cosine pairs
     # must be cut before the cross-multiplied compare. At t == 0 the

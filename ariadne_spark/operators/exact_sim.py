@@ -22,9 +22,11 @@ Block ids are data-derived (`pmod(xxhash64(vec_id), B)`), never
 partition-derived, so results are identical at any parallelism — the
 cross-cluster-size equality requirement.
 
-Scores are the same quantized integer dot product as the DuckDB oracle
-(`round(x*1000)` per component, summed as int64): deterministic,
-engine-independent, directly comparable with `ann_topk`.
+Scores follow the one embedding-score contract in `functions/embed.py`
+(the quantizer shared with the DuckDB oracle and the numpy kernels),
+and every exact top-k — this module's merge and the LSH, IVF and PQ
+re-ranks via `rerank_topk` — ranks through `topk_by_dot`, so their
+answers are directly comparable.
 
 Reference analog: the exact-location reference↔definition match that
 anchors ariadne's resolution (`packages/core/src/resolve_references/
@@ -40,6 +42,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ariadne_spark.functions.embed import int_dot, quantize
+
 
 def _blocked(embeddings: DataFrame, p_blocks: int, c_blocks: int) -> DataFrame:
     """Union of role-tagged probe/corpus replicas keyed by (pb, cb).
@@ -51,9 +55,9 @@ def _blocked(embeddings: DataFrame, p_blocks: int, c_blocks: int) -> DataFrame:
     bench line and its external localCheckpoint depend on, to shave a
     cost that is second-order next to the O(n^2) matmul this operator
     exists to pay. Callers who iterate should cache `embeddings`."""
-    qv = F.transform(F.col("embedding"), lambda x: F.round(x * 1000).cast("long"))
     base = embeddings.select(
-        F.col("vec_id").cast("long").alias("vec_id"), qv.alias("q")
+        F.col("vec_id").cast("long").alias("vec_id"),
+        quantize(F.col("embedding")).alias("q"),
     )
     blk = lambda n: F.pmod(F.xxhash64(F.col("vec_id")), F.lit(n)).cast("int")
     probe = base.select(
@@ -71,6 +75,32 @@ def _blocked(embeddings: DataFrame, p_blocks: int, c_blocks: int) -> DataFrame:
         "q",
     )
     return probe.unionByName(corpus)
+
+
+def topk_by_dot(scored: DataFrame, k: int) -> DataFrame:
+    """(src, dst, dot_q) -> + rank: the k best dst per src by
+    (dot_q desc, dst asc) — the one deterministic top-k rank."""
+    w = Window.partitionBy("src").orderBy(F.desc("dot_q"), F.col("dst"))
+    return scored.withColumn("rank", F.row_number().over(w)).where(
+        F.col("rank") <= k
+    )
+
+
+def rerank_topk(cand: DataFrame, embeddings: DataFrame, k: int) -> DataFrame:
+    """Candidate (src, dst) pairs -> (src, dst, dot_q, rank): exact
+    re-rank. The quantized vectors join back only AFTER candidate
+    generation and dedup, so the candidate shuffle carries ids alone."""
+    vecs = embeddings.select("vec_id", quantize(F.col("embedding")).alias("q"))
+    scored = (
+        cand.join(
+            vecs.select(F.col("vec_id").alias("src"), F.col("q").alias("qa")), "src"
+        )
+        .join(
+            vecs.select(F.col("vec_id").alias("dst"), F.col("q").alias("qb")), "dst"
+        )
+        .select("src", "dst", int_dot(F.col("qa"), F.col("qb")).alias("dot_q"))
+    )
+    return topk_by_dot(scored, k)
 
 
 def _split(pdf: pd.DataFrame):
@@ -118,11 +148,8 @@ def exact_topk(
         .groupBy("pb", "cb")
         .applyInPandas(local_topk, "src long, dst long, dot_q long")
     )
-    w = Window.partitionBy("src").orderBy(F.desc("dot_q"), F.col("dst"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("src", "dst", "dot_q", F.col("rank").cast("long").alias("rank"))
+    return topk_by_dot(partial, k).select(
+        "src", "dst", "dot_q", F.col("rank").cast("long").alias("rank")
     )
 
 

@@ -41,7 +41,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType, LongType
 
-from ariadne_spark.operators.ann import CENT_QSCALE, EMB_QSCALE, _centroids, q_round
+from ariadne_spark.functions.embed import CENT_QSCALE, EMB_QSCALE, q_round
+from ariadne_spark.operators.ann import _centroids
+from ariadne_spark.operators.exact_sim import rerank_topk
 
 # CENT_QSCALE (1e6) is an exact integer multiple of EMB_QSCALE (1e3);
 # _l2_scores relies on the ratio being integral.
@@ -383,30 +385,12 @@ def ivf_pq_topk(
             .where(F.col("rank") <= k)
         )
 
-    # exact re-rank: keep the ADC top-(4k) per query, join back the
-    # EMB_QSCALE-quantized vectors for those survivors only, and rank
-    # by the exact q21-scale dot — exact arithmetic on O(k) rows/query
+    # exact re-rank: keep the ADC top-(4k) per query and re-rank those
+    # survivors by the exact q21-scale dot — exact arithmetic on O(k)
+    # rows/query
     survivors = (
         pairs.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= 4 * k)
         .drop("rank", "adc_q")
     )
-    qv = F.transform(F.col("embedding"), lambda x: F.round(x * 1000).cast("long"))
-    vecs = embeddings.select("vec_id", qv.alias("q"))
-    dot = F.aggregate(
-        F.zip_with(F.col("qa"), F.col("qb"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    exact = (
-        survivors.join(
-            vecs.select(F.col("vec_id").alias("src"), F.col("q").alias("qa")), "src"
-        )
-        .join(vecs.select(F.col("vec_id").alias("dst"), F.col("q").alias("qb")), "dst")
-        .select("src", "dst", dot.alias("dot_q"))
-    )
-    w2 = Window.partitionBy("src").orderBy(F.desc("dot_q"), F.col("dst"))
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-    )
+    return rerank_topk(survivors, embeddings, k)

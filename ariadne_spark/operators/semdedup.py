@@ -30,13 +30,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ariadne_spark.operators.ann import (
-    EMB_QSCALE,
-    _centroids,
-    _ivf_assign_udf,
-    _kmeans_refine,
-    q_round,
-)
+from ariadne_spark.functions.embed import EMB_QSCALE, q_round
+from ariadne_spark.operators.ann import _centroids, _ivf_assign_udf, _kmeans_refine
 from ariadne_spark.operators.dedup import dup_clusters
 
 
@@ -55,7 +50,7 @@ def semdedup_pairs(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """-> (a, b, dot_q) with a < b: within-cluster near-dup pairs whose
-    quantized dot (round(x*1e3) int64 products, == q21/q38 arithmetic)
+    quantized dot (`functions.embed` contract, == q21/q38 arithmetic)
     is >= threshold_q. threshold_q ~ cosine * 1e6 for unit-norm input.
     """
     # normalize column names up front: the shared ann helpers
