@@ -13,7 +13,12 @@ Spatial analogs over (images, knn_edges, pip, tiles):
   with a visited set: Catalyst has no recursion, so the DFS+cycle-guard
   of `list_entrypoints.ts:56-61` becomes an iterate-to-fixpoint loop of
   joins, each iteration one shuffle bounded by the frontier size);
-- `neighborhood` — BFS over knn edges from one image, both directions;
+- `neighborhood` — BFS over knn edges from one image, both directions,
+  as ONE lazy plan: the kNN graph has out-degree <= k and the tool
+  reads at most MAX_NEIGHBORHOOD_DEPTH hops, so the hops unroll into
+  joins over direction-tagged edges (no lineage cut, no emptiness
+  probe; AQE picks the join sides at run time) and the caller's
+  collect is the only Spark work;
 - `stats` — table-level counts.
 
 All functions return DataFrames (composable, lazily planned).
@@ -21,8 +26,12 @@ All functions return DataFrames (composable, lazily planned).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+MAX_NEIGHBORHOOD_DEPTH = 8
 
 
 def reach_counts(edges: DataFrame, roots: DataFrame, max_depth: int = 10) -> DataFrame:
@@ -212,36 +221,51 @@ def neighborhood(
 ) -> DataFrame:
     """(image_id, min_depth, direction) for every node within `depth`
     hops of the focus node. direction in {'out', 'in', 'both'} —
-    callees / callers / union (≅ `show_call_graph_neighborhood`)."""
-    assert direction in ("out", "in", "both")
-    spark = edges.sparkSession
-    out_e = edges.select(F.col("src_image_id").alias("a"), F.col("dst_image_id").alias("b"))
-    in_e = edges.select(F.col("dst_image_id").alias("a"), F.col("src_image_id").alias("b"))
-    parts = []
-    for dname, e in (("out", out_e), ("in", in_e)):
-        if direction not in (dname, "both"):
-            continue
-        frontier = spark.createDataFrame([(image_id,)], "node string")
-        visited = frontier.withColumn("min_depth", F.lit(0))
-        for d in range(1, depth + 1):
-            frontier = (
-                frontier.join(e, frontier.node == e.a)
-                .select(F.col("b").alias("node"))
-                .distinct()
-                .join(visited.select("node"), "node", "left_anti")
-            ).localCheckpoint()
-            if frontier.isEmpty():
-                break
-            visited = visited.unionByName(
-                frontier.withColumn("min_depth", F.lit(d))
-            ).localCheckpoint()
-        parts.append(
-            visited.where(F.col("node") != image_id).withColumn("direction", F.lit(dname))
+    callees / callers / union (≅ `show_call_graph_neighborhood`).
+
+    One lazy plan, no driver action: each hop left-joins the reached
+    set to the direction-tagged edges and keeps min(hop) per (node,
+    direction), so a node keeps the hop it was first reached at (its
+    BFS depth) and its neighbours enter at one more. The plan grows by
+    one join and one aggregate per hop, so `depth` is bounded by
+    MAX_NEIGHBORHOOD_DEPTH."""
+    if not 1 <= depth <= MAX_NEIGHBORHOOD_DEPTH:
+        raise ValueError(f"depth must be in 1..{MAX_NEIGHBORHOOD_DEPTH}, got {depth}")
+    ends = {"out": ("src_image_id", "dst_image_id"), "in": ("dst_image_id", "src_image_id")}
+    if direction not in (*ends, "both"):
+        raise ValueError(f"direction must be 'out', 'in' or 'both', got {direction!r}")
+    dirs = list(ends) if direction == "both" else [direction]
+    tagged = reduce(
+        DataFrame.unionByName,
+        [
+            edges.select(
+                F.col(ends[d][0]).alias("node"), F.col(ends[d][1]).alias("next"),
+                F.lit(d).alias("direction"),
+            )
+            for d in dirs
+        ],
+    )
+    reached = edges.sparkSession.createDataFrame(
+        [(image_id, d, 0) for d in dirs], "node string, direction string, hop int"
+    )
+    # each reached row yields itself and its successor one hop on; an
+    # explode rather than a union with `reached` keeps one reference to
+    # the previous hop, so the plan grows linearly, not 2^depth
+    self_and_next = F.array(
+        F.struct("node", "hop"),
+        F.struct(F.col("next").alias("node"), (F.col("hop") + 1).alias("hop")),
+    )
+    for _ in range(depth):
+        reached = (
+            reached.join(tagged, ["node", "direction"], "left")
+            .select(F.explode(self_and_next).alias("r"), "direction")
+            .where(F.col("r.node").isNotNull())
+            .groupBy(F.col("r.node").alias("node"), "direction")
+            .agg(F.min("r.hop").alias("hop"))
         )
-    result = parts[0]
-    for p in parts[1:]:
-        result = result.unionByName(p)
-    return result.select(F.col("node").alias("image_id"), "min_depth", "direction")
+    return reached.where(F.col("node") != image_id).select(
+        F.col("node").alias("image_id"), F.col("hop").alias("min_depth"), "direction"
+    )
 
 
 def lineage_report(store) -> "DataFrame":

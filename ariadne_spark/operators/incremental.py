@@ -47,6 +47,10 @@ from .knn import knn_edges
 from .pip import pip_join
 
 PREFIX_RES = 3  # 8x8 coarse partitions in the sandbox; res 5-6 at 10^12
+KNN_K = 5
+KNN_MAX_HAMMING = 16
+KNN_RES = 5
+assert KNN_RES > PREFIX_RES, "knn cells must be finer than partitions"
 META_COLS = ["image_id", "phash", "lon_u", "lat_u", "w", "h", "fmt", "caption"]
 IDX_BUCKETS = 64  # id_index hash buckets (thousands at 10^12 rows)
 
@@ -102,24 +106,12 @@ class SpatialPipeline:
         root: str,
         regions: list[dict],
         max_z: int = 8,
-        knn_k: int = 5,
-        max_hamming: int = 16,
-        knn_res: int = 5,
-        knn_salt: int | str = 1,
     ):
-        assert knn_res > PREFIX_RES, "knn cells must be finer than partitions"
         self.spark = spark
         self.store = SnapshotStore(spark, root)
         self.regions = regions
         self.max_z = max_z
         assert max_z >= PREFIX_RES
-        self.knn_k = knn_k
-        self.max_hamming = max_hamming
-        self.knn_res = knn_res
-        # 'auto' = data-decided salt per run (skew.choose_salt_distributed,
-        # one scalar to the driver); results are salt-invariant
-        # (tests/test_skew.py)
-        self.knn_salt = knn_salt
 
     # -- helpers -----------------------------------------------------------
 
@@ -220,11 +212,10 @@ class SpatialPipeline:
             build = self.store.read("images_indexed", keys=build_keys)
         out = knn_edges(
             probe,
-            k=self.knn_k,
-            max_hamming=self.max_hamming,
-            res=self.knn_res,
+            k=KNN_K,
+            max_hamming=KNN_MAX_HAMMING,
+            res=KNN_RES,
             build_images=build,
-            salt=self.knn_salt,
             # incremental updates: probe cells cover only the changed
             # partitions while build replicas span the whole ring —
             # pruning always pays, so skip the auto-estimate's two
@@ -334,11 +325,6 @@ class SpatialPipeline:
         self._commit_stage("tiles_coarse", in_sid, out, None if
                            self.store.current_snapshot_id("tiles_coarse") is None
                            else ["all"], t0)
-
-    def _stage_tiles(self, in_sid: int, keys: list[str] | None) -> None:
-        """Sequential form kept for heal paths and direct callers."""
-        self._stage_tiles_fine(in_sid, keys)
-        self._stage_tiles_coarse(in_sid, keys)
 
     def _run_stages(self, in_sid: int, keys: list[str] | None) -> None:
         # pip / knn / tiles_fine / tiles_coarse are independent given

@@ -4,12 +4,19 @@ mirroring the reference's MCP tool tests."""
 
 from __future__ import annotations
 
+import random
 from collections import deque
 
 import pytest
 from pyspark.sql import functions as F
 
-from ariadne_spark.api import list_orphans, neighborhood, reach_counts, stats
+from ariadne_spark.api import (
+    MAX_NEIGHBORHOOD_DEPTH,
+    list_orphans,
+    neighborhood,
+    reach_counts,
+    stats,
+)
 from ariadne_spark.operators.knn import knn_edges
 
 
@@ -60,18 +67,48 @@ def test_reach_counts_match_bfs_oracle(images_df, edges, edge_list):
         assert got[root] == len(_bfs(adj, root, 10)), root
 
 
-def test_neighborhood_matches_bfs_oracle(edges, edge_list):
-    adj_out: dict[str, list[str]] = {}
-    adj_in: dict[str, list[str]] = {}
-    for s, d in edge_list:
-        adj_out.setdefault(s, []).append(d)
-        adj_in.setdefault(d, []).append(s)
-    focus = edge_list[0][0]
-    got = neighborhood(edges, focus, depth=3, direction="both").collect()
-    got_out = {r["image_id"]: r["min_depth"] for r in got if r["direction"] == "out"}
-    got_in = {r["image_id"]: r["min_depth"] for r in got if r["direction"] == "in"}
-    assert got_out == _bfs(adj_out, focus, 3)
-    assert got_in == _bfs(adj_in, focus, 3)
+def test_neighborhood_matches_bfs_oracle(spark, edges, edge_list):
+    """The kNN fixture graph is shallow (no path longer than 2 hops), so
+    every depth and direction also runs on a seeded random digraph of
+    out-degree 2, where paths of several lengths and cycles reach past
+    depth 8 from the focus."""
+    rng = random.Random(7)
+    ids = [f"n{i:03d}" for i in range(300)]
+    deep = sorted({(a, rng.choice(ids)) for a in ids for _ in range(2)} - {(a, a) for a in ids})
+    deep_df = spark.createDataFrame(deep, "src_image_id string, dst_image_id string")
+    cases = [(edges, edge_list, edge_list[0][0], 3, "both")] + [
+        (deep_df, deep, ids[0], depth, direction)
+        for depth in (1, 2, 3, MAX_NEIGHBORHOOD_DEPTH)
+        for direction in ("out", "in", "both")
+    ]
+    for df, pairs, focus, depth, direction in cases:
+        adj = {"out": {}, "in": {}}
+        for s, d in pairs:
+            adj["out"].setdefault(s, []).append(d)
+            adj["in"].setdefault(d, []).append(s)
+        got = neighborhood(df, focus, depth=depth, direction=direction).collect()
+        for dname in ("out", "in"):
+            want = _bfs(adj[dname], focus, depth) if direction in (dname, "both") else {}
+            assert {
+                r["image_id"]: r["min_depth"] for r in got if r["direction"] == dname
+            } == want, (focus, depth, direction, dname)
+
+
+def test_neighborhood_builds_without_spark_jobs(spark, edges, edge_list):
+    """The traversal is one lazy plan: building it runs no job (no
+    per-hop checkpoint or emptiness probe); only the collect does."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    neighborhood(edges, edge_list[0][0], depth=MAX_NEIGHBORHOOD_DEPTH)
+    assert set(tracker.getJobIdsForGroup(None)) == before
+
+
+def test_neighborhood_rejects_depth_and_direction_out_of_range(edges):
+    for depth in (0, MAX_NEIGHBORHOOD_DEPTH + 1):
+        with pytest.raises(ValueError, match="depth"):
+            neighborhood(edges, "img_a", depth=depth)
+    with pytest.raises(ValueError, match="direction"):
+        neighborhood(edges, "img_a", direction="sideways")
 
 
 def test_stats_counts(images_df, edges):

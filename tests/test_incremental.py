@@ -38,9 +38,7 @@ def _modified_images(spark, ids: np.ndarray, shift: int = 777):
 
 
 def _pipeline(spark, tmp_path, name: str) -> SpatialPipeline:
-    return SpatialPipeline(
-        spark, str(tmp_path / name), generate_regions(), max_z=7, knn_res=5
-    )
+    return SpatialPipeline(spark, str(tmp_path / name), generate_regions(), max_z=7)
 
 
 @pytest.fixture(scope="module")

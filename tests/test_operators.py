@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from ariadne_spark.functions import cells
 from ariadne_spark.functions.geometry import parse_wkt, points_in_polygon
-from ariadne_spark.operators.knn import knn_edges, orphan_images
+from ariadne_spark.operators.knn import knn_edges
 from ariadne_spark.operators.pip import pip_join
 from ariadne_spark.operators.tiles import build_pyramid, rasterize_tiles, roundtrip_check
 from ariadne_spark.synth.regions import generate_regions
@@ -143,10 +143,9 @@ class TestKnn:
         assert len(got) > 50  # fixture sanity: hotspot cells produce links
 
     def test_physical_knobs_do_not_change_results(self, spark, images_df):
-        """prune_build, join_strategy, and mirror are physical-plan
-        choices only: every combination returns the identical edge set
-        (unpruned build replicas land in probe-less cells and the join
-        drops them; hash vs merge picks the algorithm, not the rows;
+        """prune_build and mirror are physical-plan choices only: every
+        combination returns the identical edge set (unpruned build
+        replicas land in probe-less cells and the join drops them;
         half-ring + post-join mirroring finds the same unordered pairs
         once instead of twice). reason/confidence included: provenance
         strings must survive the mirror path byte-identically."""
@@ -157,22 +156,19 @@ class TestKnn:
         base = {
             tuple(r[c] for c in cols)
             for r in knn_edges(
-                images_df, k=3, max_hamming=16, prune_build=True,
-                join_strategy="merge", mirror=False,
+                images_df, k=3, max_hamming=16, prune_build=True, mirror=False,
             ).collect()
         }
         for prune in (False, None):
-            for strat in ("hash", "merge"):
-                for mir in (False, True, None):
-                    got = {
-                        tuple(r[c] for c in cols)
-                        for r in knn_edges(
-                            images_df, k=3, max_hamming=16,
-                            prune_build=prune, join_strategy=strat,
-                            mirror=mir,
-                        ).collect()
-                    }
-                    assert got == base, (prune, strat, mir)
+            for mir in (False, True, None):
+                got = {
+                    tuple(r[c] for c in cols)
+                    for r in knn_edges(
+                        images_df, k=3, max_hamming=16,
+                        prune_build=prune, mirror=mir,
+                    ).collect()
+                }
+                assert got == base, (prune, mir)
 
     def test_half_kring_offsets_partition(self):
         """half_kring_offsets picks exactly one of each antipodal pair
@@ -247,13 +243,6 @@ class TestKnn:
             assert int(m.group(2)) == first_band, r
             seen.add(m.group(1))
         assert seen == {"same-cell", "ring-neighbor"}  # both paths exercised
-
-    def test_orphans_are_never_destinations(self, spark, images_df):
-        edges = knn_edges(images_df, k=3, max_hamming=16)
-        orphans = {r.image_id for r in orphan_images(images_df, edges).collect()}
-        dsts = {r.dst_image_id for r in edges.select("dst_image_id").distinct().collect()}
-        assert orphans.isdisjoint(dsts)
-        assert len(orphans) + len(dsts) == images_df.count()
 
 
 class TestTiles:

@@ -171,9 +171,7 @@ def test_pipeline_bbox_read_uses_zone_maps(spark, tmp_path):
         pdf = generate_rows(np.asarray(ids)).to_pandas()
         return spark.createDataFrame(pdf, schema=IMAGES_SCHEMA).drop("bytes")
 
-    p = SpatialPipeline(
-        spark, str(tmp_path / "zm"), generate_regions(), max_z=7, knn_res=5
-    )
+    p = SpatialPipeline(spark, str(tmp_path / "zm"), generate_regions(), max_z=7)
     p.full_build(imgs(np.arange(600)))
     assert p.store.manifest("images_indexed").stats_cols == ["lon_u", "lat_u"]
 
